@@ -627,7 +627,7 @@ def q_fts_or_wand_topk(spark, sf_dir):
 
     idx = _index_dir_for(spark, sf_dir)
     res = bm25_index_batch(
-        spark, idx, [(0, BM25_QUERY_OR, 10)], mode="or", use_blockmax=True
+        spark, idx, [(0, BM25_QUERY_OR, 10)], mode="or"
     )
     return res.select("doc_id", _score_e4_col())
 

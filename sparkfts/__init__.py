@@ -24,4 +24,3 @@ __version__ = "0.1.0"
 
 BM25_K1 = 1.2
 BM25_B = 0.75
-BLOCK_SIZE = 128

@@ -114,7 +114,7 @@ def match_docs_batch(
 ) -> DataFrame:
     """All matching ``(query_id, doc_id)`` for each query — no scores,
     no top-k. Plan: tbucket-pruned, term-pushed postings scan reading
-    ONLY the doc_ids blobs (column pruning drops tfs/doclens/blockmax),
+    ONLY the doc_ids blobs (column pruning drops tfs/doclens),
     per-shard set kernel, no global shuffle."""
     from sparkfts.index import load_postings, read_meta, term_bucket
 
@@ -1838,7 +1838,7 @@ def sampler_agg(
     GLOBAL BM25 top ``shard_size`` by the standard (-score, doc_id)
     tie-break, so the sample — and therefore the sub-agg — is
     deterministic and cross-engine reproducible. The sample is a
-    standard bounded top-k (block-max pruned, per-shard heaps) and the
+    standard bounded top-k (per-shard heaps) and the
     sub-agg runs over <= shard_size rows: both stages are bounded
     regardless of corpus size."""
     from sparkfts.query import bm25_index_batch

@@ -256,7 +256,6 @@ def _make_bool_scorer(
     request_specs: list[tuple[int, tuple, int]],
     expansions: dict[tuple, tuple[tuple[str, float], ...]],
     avgdl_by_field: dict,
-    block_size: int,
     exclude=None,
     filtered: bool = False,
     multifield: bool = False,
@@ -314,17 +313,11 @@ def _make_bool_scorer(
             # field -> (rows_by_term, postings_of); single-field = {None: ..}
             if multifield:
                 readers = {
-                    fld: _postings_reader(
-                        sub, avgdl_by_field[fld], block_size
-                    )
+                    fld: _postings_reader(sub)
                     for fld, sub in pdf_postings.groupby("field")
                 }
             else:
-                readers = {
-                    None: _postings_reader(
-                        pdf_postings, avgdl_by_field[None], block_size
-                    )
-                }
+                readers = {None: _postings_reader(pdf_postings)}
             group_cache: dict[tuple, tuple] = {}
 
             def virtual(fld, key: str):
@@ -337,7 +330,7 @@ def _make_bool_scorer(
                     else:
                         rows_by_term, postings_of = reader
                         present = [
-                            (postings_of(t)[:3], w)
+                            (postings_of(t), w)
                             for t, w in expansions.get(ck, ())
                             if t in rows_by_term
                         ]
@@ -669,7 +662,6 @@ def bool_local(
         f0_dir = field_dir(index_dir, mf["fields"][0])
         f0_meta = read_meta(f0_dir)
         sw, stem = analysis_opts(f0_meta)
-        block_size = f0_meta["block_size"]
         avgdl_by_field = {
             f: mf["per_field"][f]["avgdl"] for f in mf["fields"]
         }
@@ -677,7 +669,6 @@ def bool_local(
         meta = read_meta(index_dir)
         n_docs = meta["n_docs"]
         sw, stem = analysis_opts(meta)
-        block_size = meta["block_size"]
         avgdl_by_field = {None: meta["avgdl"]}
     if n_docs == 0:
         return None
@@ -829,7 +820,6 @@ def bool_local(
         request_specs,
         expansions,
         avgdl_by_field,
-        block_size,
         exclude=exclude,
         filtered=bool(filter_map),
         multifield=multifield,

@@ -4,7 +4,7 @@ North-rule requirement: "resumable from checkpoint with per-partition
 lineage + metrics". Protocol (SURVEY.md §4.2, §7.3):
 
   - Global corpus stats (N, avgdl) are computed ONCE and persisted to
-    ``stats.json`` before any shard builds — every batch scores/block-max
+    ``stats.json`` before any shard builds — every batch scores
     against the same normalization.
   - Work is partitioned by doc-space shard; each job builds a batch of
     shards into its own *segment* directory (idempotent overwrite).
@@ -31,7 +31,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkfts import BLOCK_SIZE, BM25_B, BM25_K1
+from sparkfts import BM25_B, BM25_K1
 from sparkfts.index import META_FILE, build_index
 from sparkfts.tokens import prepare_pages
 
@@ -191,7 +191,6 @@ def resumable_build(
         "avgdl": avgdl,
         "n_shards": n_shards,
         "n_tbuckets": n_tbuckets,
-        "block_size": BLOCK_SIZE,
         "k1": BM25_K1,
         "b": BM25_B,
         "segments": sorted(

@@ -7,7 +7,7 @@ Usage (local sandbox; on a cluster replace ``python -m`` with
   python -m sparkfts.cli build  --input /tmp/pages.parquet --index /tmp/idx \
       --shards 8 [--resume] [--cores 32]
   python -m sparkfts.cli query  --index /tmp/idx --query "hello world" \
-      [--k 10] [--mode and|or] [--no-blockmax]
+      [--k 10] [--mode and|or]
   python -m sparkfts.cli bench  --input /tmp/pages.parquet --index /tmp/idx \
       --cores 8,32
 
@@ -160,7 +160,6 @@ def cmd_query(args: argparse.Namespace) -> None:
                 ("--slop", args.slop),
                 ("--transpositions", args.transpositions),
                 ("--min-should-match", args.min_should_match != 1),
-                ("--no-blockmax", args.no_blockmax),
                 ("--routing", args.routing is not None),
                 ("--fuzzy-prefix-length", bool(args.fuzzy_prefix_length)),
                 ("--scroll", bool(args.scroll)),
@@ -210,7 +209,6 @@ def cmd_query(args: argparse.Namespace) -> None:
                 ("--slop", args.slop),
                 ("--transpositions", args.transpositions),
                 ("--min-should-match", args.min_should_match != 1),
-                ("--no-blockmax", args.no_blockmax),
                 ("--routing", args.routing is not None),
                 ("--fuzzy-prefix-length", bool(args.fuzzy_prefix_length)),
                 ("--scroll", bool(args.scroll)),
@@ -289,7 +287,6 @@ def cmd_query(args: argparse.Namespace) -> None:
                 ("--search-after", args.search_after),
                 ("--offset", args.offset),
                 ("--min-should-match", args.min_should_match != 1),
-                ("--no-blockmax", args.no_blockmax),
                 ("--max-expansions", args.max_expansions is not None
                  and flag != "--span-multi"),
                 ("--transpositions", args.transpositions),
@@ -652,7 +649,6 @@ def cmd_query(args: argparse.Namespace) -> None:
                 [(0, args.query, args.k)],
                 fields=args.fields.split(","),
                 mode=args.mode,
-                use_blockmax=not args.no_blockmax,
                 offset=args.offset,
                 filter_expr=args.filter,
             )
@@ -765,7 +761,6 @@ def cmd_query(args: argparse.Namespace) -> None:
             args.index,
             [(0, args.query, args.k)],
             mode=args.mode,
-            use_blockmax=not args.no_blockmax,
             resolve_urls=True,
             offset=args.offset,
             search_after=search_after,
@@ -996,8 +991,11 @@ def cmd_msearch(args: argparse.Namespace) -> None:
 def cmd_search_dsl(args: argparse.Namespace) -> None:
     """ES search with a raw query-DSL JSON body (the exact payload the
     reference hands to client.search): parse via sparkfts.esdsl, run in
-    the single-pass bool-tree kernel. Match-all bodies are rejected here
-    (use `query` with no terms / mget instead) — fail-loud."""
+    the single-pass bool-tree kernel. Bodies with ``aggs`` or ``sort``
+    run through :func:`sparkfts.esdsl.run_request`; a sorted hit prints
+    its ``sort_value`` instead of a score. Other match-all bodies are
+    rejected here (use `query` with no terms / mget instead) —
+    fail-loud."""
     from sparkfts.booltree import bool_topk_batch
     from sparkfts.esdsl import EsDslError, parse_request_json
 
@@ -1011,12 +1009,11 @@ def cmd_search_dsl(args: argparse.Namespace) -> None:
         body_obj = json.loads(body)
     except json.JSONDecodeError as e:
         raise SystemExit(f"search-dsl: request body is not valid JSON: {e}")
-    has_aggs = isinstance(body_obj, dict) and (
-        "aggs" in body_obj or "aggregations" in body_obj
-    )
-    if has_aggs:
-        # query + aggs in one request: run_request over the indexed
-        # docvalues (the docmap carries the --docvalues build columns)
+    if isinstance(body_obj, dict) and (
+        {"aggs", "aggregations", "sort"} & set(body_obj)
+    ):
+        # query + aggs / sort in one request: run_request over the
+        # indexed docvalues (the docmap carries the --docvalues columns)
         from sparkfts.esdsl import run_request
         from sparkfts.index import load_docmap
 
@@ -1031,10 +1028,11 @@ def cmd_search_dsl(args: argparse.Namespace) -> None:
         except EsDslError as e:
             raise SystemExit(f"search-dsl: {e}")
         rows = out["hits"].collect()
+        value = "sort_value" if "sort_value" in out["hits"].columns else "score"
         for r in rows:
             print(json.dumps(
-                {"rank": r["rank"], "doc_id": r["doc_id"],
-                 "score": r["score"]}
+                {"rank": r["rank"], "doc_id": r["doc_id"], value: r[value]},
+                default=str,  # sort values may be dates
             ))
         for name, frame in out["aggregations"].items():
             print(json.dumps({
@@ -1511,7 +1509,6 @@ def cmd_ingest(args: argparse.Namespace) -> None:
             {
                 "n_docs": meta["n_docs"],
                 "avgdl": round(meta["avgdl"], 4),
-                "blockmax_safe": meta.get("blockmax_safe", True),
                 "sec": round(time.time() - t0, 2),
                 "index": args.index,
             }
@@ -1573,7 +1570,6 @@ def main(argv: list[str] | None = None) -> None:
     q.add_argument("--query", required=True)
     q.add_argument("--k", type=int, default=10)
     q.add_argument("--mode", choices=["and", "or"], default="and")
-    q.add_argument("--no-blockmax", action="store_true")
     q.add_argument("--offset", type=int, default=0,
                    help="deep pagination: return ranks offset+1..offset+k")
     q.add_argument("--search-after", default=None, metavar="SCORE,DOC_ID",

@@ -11,10 +11,7 @@ Consistency model (matches ES/Lucene):
 - results NEVER contain a deleted doc, from the moment of deletion;
 - corpus statistics (N, avgdl, df) still include deleted docs until the
   next merge, so surviving docs keep their pre-delete scores — exactly
-  Lucene's numDocs-vs-maxDoc drift, resolved by compaction;
-- block-max pruning is disabled while tombstones exist (a theta seeded
-  from a deleted doc's score could over-prune); the exhaustive scorer
-  keeps OR queries exact, and merge restores pruning.
+  Lucene's numDocs-vs-maxDoc drift, resolved by compaction.
 
 Scale note: the tombstone set ships to kernels as a sorted int64 array
 (8 bytes/deleted doc — Lucene's live-docs bitmap equivalent). Merge

@@ -17,11 +17,10 @@ pruned postings scan cogrouped BY SHARD with the docmap's value column
 (the docmap is written partitioned by shard, so each kernel receives
 exactly its shard's values); the kernel scores/matches in-shard and
 reduces to a BOUNDED candidate set; a partitioned global window merges
-``<= n_shards * bound`` rows. Unlike plain BM25 top-k, these operators
-cannot use block-max pruning: a doc's final ordering depends on a
-doc value the postings' score bounds know nothing about (the same
-reason ES evaluates function_score/sort queries exhaustively per
-shard). The per-shard cost is therefore the full in-shard match set —
+``<= n_shards * bound`` rows. A doc's final ordering depends on a doc
+value the postings know nothing about, so the kernel keeps the full
+in-shard match set (the same reason ES evaluates function_score/sort
+queries exhaustively per shard). The per-shard cost is therefore the full in-shard match set —
 ES's own cost model for these queries — but the cross-shard transfer
 stays bounded:
 
@@ -85,14 +84,12 @@ def _make_value_kernel(
         """All in-shard (ids, scores) per query — exhaustive, ES's own
         cost model for value-ordered queries (no bound can prune on
         score when the ordering depends on a doc value)."""
-        rows_by_term, postings_of = _postings_reader(
-            pdf_postings, avgdl, block_size=128
-        )
+        rows_by_term, postings_of = _postings_reader(pdf_postings)
         idf_map = {t: idf_fn(n_docs, df_map.get(t, 0)) for t in rows_by_term}
         for qid, terms, k in queries_analyzed:
             if mode == "and" and not all(t in rows_by_term for t in terms):
                 continue
-            tp = [postings_of(t)[:3] for t in terms]
+            tp = [postings_of(t) for t in terms]
             idfs = np.array([idf_map.get(t, 0.0) for t in terms], np.float64)
             score = score_conjunctive if mode == "and" else score_disjunctive
             ids, scores = score(tp, idfs, avgdl, n_docs, exclude=exclude)
@@ -115,16 +112,14 @@ def _make_value_kernel(
                 # required < 1 -> the doc never matches
                 from sparkfts.wand import union_scores_counts
 
-                rows_by_term, postings_of = _postings_reader(
-                    pdf_postings, avgdl, block_size=128
-                )
+                rows_by_term, postings_of = _postings_reader(pdf_postings)
                 idf_map = {
                     t: idf_fn(n_docs, df_map.get(t, 0))
                     for t in rows_by_term
                 }
                 for qid, terms, k in queries_analyzed:
                     nonempty = [
-                        (postings_of(t)[:3], idf_map[t])
+                        (postings_of(t), idf_map[t])
                         for t in terms
                         if t in rows_by_term
                     ]

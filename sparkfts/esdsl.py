@@ -751,7 +751,8 @@ def run_request(
     :func:`sparkfts.booltree.bool_matches_batch` (filter_expr and
     tombstones included) and joined to the caller's ``doc_values``
     frame (doc_id + the agg/sort/_source fields). A match-all query
-    aggregates over ``doc_values`` as provided. Each agg lowers to
+    ranks, counts and aggregates the live docs: tombstoned ids are
+    masked out of the docmap and of ``doc_values``. Each agg lowers to
     plain grouped / scalar Catalyst aggregation on that scope —
     partial-agg shuffles only; the sorted page is a TakeOrdered over
     the scope (never a full sort)."""
@@ -834,6 +835,22 @@ def run_request(
             bool_matches_batch(spark, index_dir, [req])
             .select("doc_id", "score")
         )
+    else:
+        from sparkfts.deletes import load_tombstones
+        from sparkfts.index import in_list, load_docmap
+
+        tomb = load_tombstones(spark, index_dir)
+        live = (
+            None if tomb is None
+            else ~in_list("doc_id", [int(d) for d in tomb])
+        )
+
+        def live_docs():
+            docs = load_docmap(spark, index_dir)
+            return docs if live is None else docs.where(live)
+
+        if doc_values is not None and live is not None:
+            doc_values = doc_values.where(live)
     if doc_values is not None:
         scope = (
             doc_values if req.is_match_all
@@ -868,11 +885,10 @@ def run_request(
             )
         )
     elif req.is_match_all:
-        from sparkfts.index import load_docmap
         from sparkfts.querybuilder import match_all_topk
 
         hits = (
-            match_all_topk(load_docmap(spark, index_dir), k=page)
+            match_all_topk(live_docs(), k=page)
             .where(F.col("rank") > offset)
             .select(
                 (F.col("rank") - offset).cast("int").alias("rank"),
@@ -900,9 +916,7 @@ def run_request(
     out = {"hits": hits, "aggregations": {}, "total": None}
     if track_total:
         if req.is_match_all:
-            from sparkfts.index import load_docmap
-
-            out["total"] = load_docmap(spark, index_dir).count()
+            out["total"] = live_docs().count()
         else:
             out["total"] = match.count()
     if not aggs:

@@ -14,7 +14,7 @@ over every ranking ``i`` in which ``d`` appears (ES default
 Scale shape: the fuse operates on the LEGS' OUTPUTS — per-query top-N
 candidate lists (``n_queries x depth`` rows), never the corpora — so it
 is one tiny groupBy + window regardless of index size. Each leg keeps
-its own scale path (block-max WAND kernels for BM25, bucket-pruned LSH /
+its own scale path (per-shard top-k kernels for BM25, bucket-pruned LSH /
 IVF for ANN); fusion adds no scan and no wide shuffle.
 
 Determinism: contributions are folded in ascending ``system`` index

@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkfts import BLOCK_SIZE, BM25_B, BM25_K1
+from sparkfts import BM25_B, BM25_K1
 from sparkfts.codec import (
     delta_encode_grouped,
     encode_varint_grouped,
@@ -54,8 +54,7 @@ from sparkfts.tokens import build_docmap, prepare_pages, tokenize_docs
 
 POSTINGS_SCHEMA = (
     "term string, shard int, df_shard long, doc_ids binary, tfs binary, "
-    "doclens binary, "
-    "block_first_doc array<long>, block_max_tfn array<double>, tbucket int"
+    "doclens binary, tbucket int"
 )
 
 META_FILE = "meta.json"
@@ -70,11 +69,7 @@ def term_bucket(term: str, n_tbuckets: int) -> int:
 
 
 def _encode_group_block(
-    pdf: pd.DataFrame,
-    starts: np.ndarray,
-    avgdl: float,
-    n_tbuckets: int,
-    block_size: int,
+    pdf: pd.DataFrame, starts: np.ndarray, n_tbuckets: int
 ) -> pd.DataFrame:
     """Encode a batch of complete (term, shard) groups -> postings rows.
 
@@ -82,8 +77,6 @@ def _encode_group_block(
     first-row offsets of each group. All heavy work is vectorized across
     every group in the batch.
     """
-    from sparkfts.wand import tf_norm
-
     ids = pdf["doc_id"].to_numpy(dtype=np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64).astype(np.uint64)
     dls = pdf["doclen"].to_numpy(dtype=np.int64).astype(np.uint64)
@@ -96,18 +89,6 @@ def _encode_group_block(
     tfs_blobs = encode_varint_grouped(tfs, starts)
     dls_blobs = encode_varint_grouped(dls, starts)
 
-    # block boundaries across all groups: every group contributes
-    # ceil(len/block_size) blocks starting at its own offset
-    nb = (lens + block_size - 1) // block_size
-    block_starts = np.concatenate(
-        [s + np.arange(0, ln, block_size) for s, ln in zip(starts, lens)]
-    )
-    tfn = tf_norm(tfs, dls, avgdl)
-    bmax_all = np.maximum.reduceat(tfn, block_starts)
-    bfirst_all = ids[block_starts]
-    bends = np.cumsum(nb)
-    bstarts = bends - nb
-
     terms = pdf["term"].to_numpy()[starts]
     shards = pdf["shard"].to_numpy()[starts]
     return pd.DataFrame(
@@ -118,15 +99,8 @@ def _encode_group_block(
             "doc_ids": ids_blobs,
             "tfs": tfs_blobs,
             # per-posting doclens ('norms' inlined, ~1 varint byte each):
-            # scoring needs no doc-table lookup and segment merges can
-            # recompute block metadata under a changed global avgdl
+            # scoring needs no doc-table lookup
             "doclens": dls_blobs,
-            "block_first_doc": [
-                bfirst_all[s:e].tolist() for s, e in zip(bstarts, bends)
-            ],
-            "block_max_tfn": [
-                bmax_all[s:e].tolist() for s, e in zip(bstarts, bends)
-            ],
             "tbucket": np.fromiter(
                 (term_bucket(t, n_tbuckets) for t in terms),
                 dtype=np.int32,
@@ -136,7 +110,7 @@ def _encode_group_block(
     )
 
 
-def _make_postings_stream(avgdl: float, n_tbuckets: int, block_size: int):
+def _make_postings_stream(n_tbuckets: int):
     """Streaming encoder over a partition's (term, shard, doc_id)-sorted rows.
 
     Carries the trailing (possibly incomplete) group across Arrow batch
@@ -164,19 +138,13 @@ def _make_postings_stream(avgdl: float, n_tbuckets: int, block_size: int):
             pending = pdf.iloc[starts[-1] :]
             if starts.size > 1:
                 yield _encode_group_block(
-                    pdf.iloc[: starts[-1]],
-                    starts[:-1],
-                    avgdl,
-                    n_tbuckets,
-                    block_size,
+                    pdf.iloc[: starts[-1]], starts[:-1], n_tbuckets
                 )
         if pending is not None and len(pending):
             yield _encode_group_block(
                 pending.reset_index(drop=True),
                 np.array([0], dtype=np.int64),
-                avgdl,
                 n_tbuckets,
-                block_size,
             )
 
     return gen
@@ -217,7 +185,6 @@ def build_index(
     out_dir: str,
     n_shards: int = 8,
     n_tbuckets: int = 16,
-    block_size: int = BLOCK_SIZE,
     build_partitions: int | None = None,
     validate_extraction: bool = False,
     shard_filter: list[int] | None = None,
@@ -364,7 +331,7 @@ def build_index(
         tokens.repartition(build_partitions, "term", "shard")
         .sortWithinPartitions("term", "shard", "doc_id")
         .mapInPandas(
-            _make_postings_stream(avgdl, n_tbuckets, block_size),
+            _make_postings_stream(n_tbuckets),
             POSTINGS_SCHEMA,
         )
     )
@@ -410,7 +377,6 @@ def build_index(
         "avgdl": float(avgdl),
         "n_shards": n_shards,
         "n_tbuckets": n_tbuckets,
-        "block_size": block_size,
         "k1": BM25_K1,
         "b": BM25_B,
         "segment": segment,
@@ -773,7 +739,6 @@ def index_stats(spark: SparkSession, index_dir: str) -> dict:
         "avgdl": meta["avgdl"],
         "n_shards": meta["n_shards"],
         "n_tbuckets": meta["n_tbuckets"],
-        "blockmax_safe": meta.get("blockmax_safe", True),
         "tombstones": 0 if tombs is None else int(tombs.size),
         "segments": segs,
         "total_bytes": sum(s["bytes"] for s in segs),

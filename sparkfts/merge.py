@@ -9,8 +9,7 @@ everything into the root single-segment layout:
   - per (term, shard): decode every segment's sorted run, concatenate,
     stable-sort by (doc_id); on duplicate doc_ids the HIGHEST segment_id
     wins (newest crawl replaces oldest — FIXTURES.md §4);
-  - block-max metadata is recomputed under the (possibly updated) global
-    avgdl, so WAND stays safe after corpus growth;
+  - global stats (n_docs, avgdl) are recomputed from the surviving docmap;
   - docmap rows are deduped the same way;
   - merge ∘ merge = merge: running on an already-compacted index decodes
     one run per (term, shard) and re-emits identical bytes.
@@ -36,14 +35,11 @@ from sparkfts.index import (
     segment_dirs,
     term_bucket,
 )
-from sparkfts.wand import block_metadata, tf_norm
 
 
 def _merge_one_group(
     pdf: pd.DataFrame,
-    avgdl: float,
     n_tbuckets: int,
-    block_size: int,
     tombstones: np.ndarray | None = None,
     superseded: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> dict | None:
@@ -83,8 +79,6 @@ def _merge_one_group(
         ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
     if ids.size == 0:
         return None
-    tfn = tf_norm(tfs, dls, avgdl)
-    first, maxes = block_metadata(ids, tfn, block_size)
     term = pdf["term"].iloc[0]
     return {
         "term": term,
@@ -93,16 +87,12 @@ def _merge_one_group(
         "doc_ids": encode_varint(delta_encode(ids.astype(np.uint64))),
         "tfs": encode_varint(tfs),
         "doclens": encode_varint(dls),
-        "block_first_doc": first.tolist(),
-        "block_max_tfn": maxes.tolist(),
         "tbucket": term_bucket(term, n_tbuckets),
     }
 
 
 def _make_merge_stream(
-    avgdl: float,
     n_tbuckets: int,
-    block_size: int,
     tombstones: np.ndarray | None = None,
     superseded: tuple[np.ndarray, np.ndarray] | None = None,
 ):
@@ -140,8 +130,7 @@ def _make_merge_stream(
                     r
                     for s, e in zip(starts[:-1], starts[1:])
                     if (r := _merge_one_group(
-                        pdf.iloc[s:e], avgdl, n_tbuckets, block_size,
-                        tombstones, superseded,
+                        pdf.iloc[s:e], n_tbuckets, tombstones, superseded,
                     )) is not None
                 ]
                 if rows:
@@ -149,9 +138,7 @@ def _make_merge_stream(
         if pending is not None and len(pending):
             r = _merge_one_group(
                 pending.reset_index(drop=True),
-                avgdl,
                 n_tbuckets,
-                block_size,
                 tombstones,
                 superseded,
             )
@@ -220,10 +207,9 @@ def merge_segments(
             F.broadcast(tomb_df), "doc_id", "left_anti"
         )
     if stats is None:
-        # final corpus stats from the surviving docmap — BEFORE the
-        # postings merge, so block maxima are encoded under the final
-        # avgdl. This also corrects the running-stats drift a re-crawl
-        # introduces (the ingest counter saw the doc twice).
+        # final corpus stats from the surviving docmap. This also
+        # corrects the running-stats drift a re-crawl introduces (the
+        # ingest counter saw the doc twice).
         srow = docmap_merged.agg(
             F.count("*").alias("n"),
             F.sum(F.col("doclen").cast("long")).alias("t"),
@@ -241,13 +227,7 @@ def merge_segments(
         postings.repartition(n_parts, "term", "shard")
         .sortWithinPartitions("term", "shard", "segment_id")
         .mapInPandas(
-            _make_merge_stream(
-                meta["avgdl"],
-                meta["n_tbuckets"],
-                meta["block_size"],
-                tombstones,
-                superseded,
-            ),
+            _make_merge_stream(meta["n_tbuckets"], tombstones, superseded),
             POSTINGS_SCHEMA,
         )
     )
@@ -374,7 +354,6 @@ def merge_segments(
         shutil.rmtree(segs)
     clear_tombstones(index_dir)  # deletes are now physical
     meta["segments"] = []
-    meta["blockmax_safe"] = True  # block maxima recomputed under final avgdl
 
     from sparkfts.index import _write_terms
 

@@ -155,7 +155,6 @@ def bm25_multifield_batch(
     queries: list[tuple[int, str, int]],
     fields: list[str] | None = None,
     mode: str = "and",
-    use_blockmax: bool = True,
     offset: int = 0,
     filter_expr: str | None = None,
     tie_breaker: float = 0.0,
@@ -246,7 +245,6 @@ def bm25_multifield_batch(
                 field_dir(index_dir, fld),
                 widened,
                 mode=mode,
-                use_blockmax=use_blockmax,
                 filter_expr=filter_expr,
             ),
             boost,

@@ -50,7 +50,7 @@ def bm25_multi_index_batch(
     DataFrame(query_id, rank, index_ord, doc_id, score).
 
     ``kw`` passes through to :func:`sparkfts.query.bm25_index_batch`
-    (filter_expr, must_not, use_blockmax, ...); ``offset`` /
+    (filter_expr, must_not, min_should_match, ...); ``offset`` /
     ``search_after`` are rejected — pagination must happen on the merged
     ranking, not per index.
     """

@@ -156,7 +156,6 @@ def _grouped_tail(
         queries_grouped,
         meta["avgdl"],
         mode,
-        meta["block_size"],
         exclude=load_tombstones(spark, index_dir),
         filtered=filter_expr is not None,
     )

@@ -190,24 +190,45 @@ def bm25_scan(
 # ---------------------------------------------------------------------------
 
 
-def _postings_reader(pdf_postings: pd.DataFrame, avgdl: float, block_size: int):
-    """Per-shard decode machinery shared by the exact and fuzzy scorers.
+def decode_runs(rows) -> tuple:
+    """One term's postings ``(doc_ids, tfs, doclens)`` from its posting
+    rows (pandas rows or Spark Rows carrying the three blobs).
 
-    Returns ``(rows_by_term, postings_of)`` where ``postings_of(term)``
-    lazily decodes (and caches) the term's shard postings as
-    ``(doc_ids, tfs, doclens, (block_first_doc, block_max_tfn))``,
-    sorted-merging multi-segment runs when present.
-    """
+    Several runs (shards, or segments of an uncompacted index) are
+    concatenated and stably sorted by doc_id."""
     import numpy as np
 
     from sparkfts.codec import decode_varint, delta_decode
 
-    _empty = (
-        np.empty(0, np.int64),
-        np.empty(0, np.uint64),
-        np.empty(0, np.uint64),
-        (np.empty(0, np.int64), np.empty(0, np.float64)),
-    )
+    if not rows:
+        return (
+            np.empty(0, np.int64),
+            np.empty(0, np.uint64),
+            np.empty(0, np.uint64),
+        )
+    if len(rows) == 1:
+        r = rows[0]
+        return (
+            delta_decode(decode_varint(r["doc_ids"])).astype(np.int64),
+            decode_varint(r["tfs"]),
+            decode_varint(r["doclens"]),
+        )
+    ids = np.concatenate(
+        [delta_decode(decode_varint(r["doc_ids"])) for r in rows]
+    ).astype(np.int64)
+    tfs = np.concatenate([decode_varint(r["tfs"]) for r in rows])
+    dls = np.concatenate([decode_varint(r["doclens"]) for r in rows])
+    order = np.argsort(ids, kind="stable")
+    return ids[order], tfs[order], dls[order]
+
+
+def _postings_reader(pdf_postings: pd.DataFrame):
+    """Per-shard decode machinery shared by the exact and fuzzy scorers.
+
+    Returns ``(rows_by_term, postings_of)`` where ``postings_of(term)``
+    lazily decodes (and caches) the term's shard postings as
+    ``(doc_ids, tfs, doclens)`` (:func:`decode_runs`).
+    """
     rows_by_term: dict[str, list] = {}
     for _, r in pdf_postings.iterrows():
         rows_by_term.setdefault(r["term"], []).append(r)
@@ -215,35 +236,7 @@ def _postings_reader(pdf_postings: pd.DataFrame, avgdl: float, block_size: int):
 
     def postings_of(term: str):
         if term not in cache:
-            rows = rows_by_term.get(term)
-            if not rows:
-                cache[term] = _empty
-            elif len(rows) == 1:
-                r = rows[0]
-                ids = delta_decode(decode_varint(r["doc_ids"])).astype(np.int64)
-                tfs = decode_varint(r["tfs"])
-                dls = decode_varint(r["doclens"])
-                bm = (
-                    np.asarray(r["block_first_doc"], np.int64),
-                    np.asarray(r["block_max_tfn"], np.float64),
-                )
-                cache[term] = (ids, tfs, dls, bm)
-            else:
-                # multi-segment: sorted merge of per-segment runs
-                # (doc spaces disjoint across committed segments)
-                ids = np.concatenate(
-                    [delta_decode(decode_varint(r["doc_ids"])) for r in rows]
-                ).astype(np.int64)
-                tfs = np.concatenate([decode_varint(r["tfs"]) for r in rows])
-                dls = np.concatenate(
-                    [decode_varint(r["doclens"]) for r in rows]
-                )
-                order = np.argsort(ids, kind="stable")
-                ids, tfs, dls = ids[order], tfs[order], dls[order]
-                from sparkfts.wand import block_metadata, tf_norm
-
-                bm = block_metadata(ids, tf_norm(tfs, dls, avgdl), block_size)
-                cache[term] = (ids, tfs, dls, bm)
+            cache[term] = decode_runs(rows_by_term.get(term))
         return cache[term]
 
     return rows_by_term, postings_of
@@ -254,8 +247,6 @@ def _make_shard_scorer(
     n_docs: int,
     avgdl: float,
     mode: str,
-    use_blockmax: bool,
-    block_size: int,
     afters: dict[int, tuple[float, int]] | None = None,
     min_should_match=1,
     exclude=None,
@@ -290,11 +281,7 @@ def _make_shard_scorer(
     """
     import numpy as np
 
-    from sparkfts.wand import (
-        score_conjunctive,
-        score_disjunctive,
-        score_disjunctive_blockmax,
-    )
+    from sparkfts.wand import score_conjunctive, score_disjunctive
 
     def scorer(
         pdf_postings: pd.DataFrame, pdf_allowed: pd.DataFrame | None = None
@@ -310,9 +297,7 @@ def _make_shard_scorer(
                 else np.empty(0, np.int64)
             )
         if len(pdf_postings) and not (filtered and include.size == 0):
-            rows_by_term, postings_of = _postings_reader(
-                pdf_postings, avgdl, block_size
-            )
+            rows_by_term, postings_of = _postings_reader(pdf_postings)
             if df_map is not None:
                 idf_map = {
                     t: idf_fn(n_docs, df_map.get(t, 0))
@@ -327,11 +312,8 @@ def _make_shard_scorer(
             for qid, terms, k in queries_analyzed:
                 if mode == "and" and not all(t in rows_by_term for t in terms):
                     continue  # a required term is absent from this shard
-                tp, bms = [], []
-                for t in terms:  # sorted-term order (pinned summation)
-                    ids, tfs, dls, bm = postings_of(t)
-                    tp.append((ids, tfs, dls))
-                    bms.append(bm)
+                # sorted-term order (pinned summation)
+                tp = [postings_of(t) for t in terms]
                 # a term absent from this shard's rows has empty postings,
                 # so its idf value is never multiplied into anything
                 idfs = np.array(
@@ -365,29 +347,10 @@ def _make_shard_scorer(
                         tp, idfs, avgdl, k, after=after, exclude=excl,
                         include=include,
                     )
-                elif msm > 1:
-                    # block-max theta-seeding assumes plain OR; the
-                    # count-filtered variant scores exhaustively
+                else:
                     ids, scores = score_disjunctive(
                         tp, idfs, avgdl, k, after=after,
                         min_match=msm, exclude=excl,
-                        include=include,
-                    )
-                elif use_blockmax and after is None:
-                    # filter-aware block-max (r5): theta seeds from the
-                    # seed term's ALLOWED docs (include/exclude masked),
-                    # so pruning stays safe-to-k under bool.filter,
-                    # tombstones and must_not; block upper bounds are
-                    # superset maxima (valid, merely less tight). Only a
-                    # search_after cursor still forces exhaustive (its
-                    # winners may sit below any seedable theta).
-                    ids, scores = score_disjunctive_blockmax(
-                        tp, idfs, bms, avgdl, k, block_size=block_size,
-                        exclude=excl, include=include,
-                    )
-                else:
-                    ids, scores = score_disjunctive(
-                        tp, idfs, avgdl, k, after=after, exclude=excl,
                         include=include,
                     )
                 if ids.size:
@@ -418,7 +381,6 @@ def bm25_index_batch(
     index_dir: str,
     queries: list[tuple[int, str, int]],
     mode: str = "and",
-    use_blockmax: bool = True,
     resolve_urls: bool = False,
     offset: int = 0,
     search_after: dict[int, tuple[float, int]] | None = None,
@@ -454,8 +416,7 @@ def bm25_index_batch(
     docmap is already written partitioned by shard, so the allowed-set
     side shuffles at most one shard's ids to each kernel, bounded by
     docs-per-shard (the same executor-memory unit the postings already
-    impose). Block-max pruning is gated off (a theta seeded from a
-    filtered-out doc could over-prune), same as under tombstones.
+    impose).
 
     ``must_not``: ES ``bool.must_not`` — per query_id, a query text whose
     analyzed terms EXCLUDE matching docs (no scoring contribution). The
@@ -467,7 +428,7 @@ def bm25_index_batch(
         on term (files are sorted by term within each bucket)
       tiny agg: global df per query term (sum of df_shard) -> idf map
       groupBy(shard) -> Arrow kernel: decode (doclens inlined) ->
-        intersect/WAND -> vectorized BM25 -> per-shard top-k
+        intersect/union -> vectorized BM25 -> per-shard top-k
       global merge: window top-k per query over <= n_shards*k rows.
 
     ``offset``: deep pagination (the reference's acknowledged scroll TODO,
@@ -497,13 +458,7 @@ def bm25_index_batch(
     from sparkfts.deletes import load_tombstones
 
     meta = read_meta(index_dir)
-    # streaming appends carry block maxima computed under point-in-time
-    # avgdl; until a merge recomputes them, fall back to the exhaustive
-    # scorer (exact, just unpruned) — sparkfts.streaming sets this flag
-    use_blockmax = use_blockmax and meta.get("blockmax_safe", True)
-    # tombstoned docs mask out inside every kernel BEFORE top-k; since r5
-    # they no longer gate block-max off — the filter-aware kernel seeds
-    # theta from live/allowed docs only (wand.score_disjunctive_blockmax)
+    # tombstoned docs mask out inside every kernel BEFORE top-k
     tombstones = load_tombstones(spark, index_dir)
     routed_shard = None
     if routing is not None:
@@ -569,8 +524,6 @@ def bm25_index_batch(
         meta["n_docs"],
         meta["avgdl"],
         mode,
-        use_blockmax,
-        meta["block_size"],
         afters=search_after,
         min_should_match=min_should_match,
         exclude=tombstones,
@@ -699,7 +652,7 @@ def explain_score(
         & F.col("term").isin(terms)
         & (F.col("shard") == shard)
     )
-    n_docs, avgdl, block_size = meta["n_docs"], meta["avgdl"], meta["block_size"]
+    n_docs, avgdl = meta["n_docs"], meta["avgdl"]
     target = int(doc_id)
     k1, b = BM25_K1, BM25_B
 
@@ -717,10 +670,10 @@ def explain_score(
         ]
         if not len(pdf):
             return pd.DataFrame(columns=cols)
-        _, postings_of = _postings_reader(pdf, avgdl, block_size)
+        _, postings_of = _postings_reader(pdf)
         rows = []
         for t in sorted(set(pdf["term"])):
-            ids, tfs, dls, _bm = postings_of(t)
+            ids, tfs, dls = postings_of(t)
             pos = np.searchsorted(ids, target)
             if pos < ids.size and ids[pos] == target:
                 tf = int(tfs[pos])
@@ -757,7 +710,6 @@ def _make_fuzzy_shard_scorer(
     queries_grouped: list[tuple[int, list[tuple[str, list[tuple[str, float]]]], int]],
     avgdl: float,
     mode: str,
-    block_size: int,
     exclude=None,
     filtered: bool = False,
 ):
@@ -787,9 +739,7 @@ def _make_fuzzy_shard_scorer(
                 else np.empty(0, np.int64)
             )
         if len(pdf_postings) and not (filtered and include.size == 0):
-            rows_by_term, postings_of = _postings_reader(
-                pdf_postings, avgdl, block_size
-            )
+            rows_by_term, postings_of = _postings_reader(pdf_postings)
             group_cache: dict[tuple, tuple] = {}
             for qid, groups_spec, k in queries_grouped:
                 groups = []
@@ -800,7 +750,7 @@ def _make_fuzzy_shard_scorer(
                     virt = group_cache.get(key)
                     if virt is None:
                         present = [
-                            (postings_of(t)[:3], w)
+                            (postings_of(t), w)
                             for t, w in exps
                             if t in rows_by_term
                         ]
@@ -1110,7 +1060,6 @@ def _grouped_expansion_topk(
         queries_grouped,
         meta["avgdl"],
         mode,
-        meta["block_size"],
         exclude=load_tombstones(spark, index_dir),
         filtered=filter_expr is not None,
     )

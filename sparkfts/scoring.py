@@ -33,9 +33,8 @@ term-pushed, tbucket-pruned postings scan; for value-dependent scores
 the scan cogroups BY SHARD with the docmap's value column; the kernel
 reduces to a bounded per-shard top-k; a query-partitioned global
 window merges ``<= n_shards * k`` rows. Like ES itself, value-shaped
-scores cannot use block-max pruning (the bound knows nothing about the
-doc value), so the kernel is exhaustive in-shard — ES's own cost model
-for these queries. ``boosting`` and ``constant_score`` need no doc
+scores are computed exhaustively in-shard — ES's own cost model for
+these queries. ``boosting`` and ``constant_score`` need no doc
 values and stay postings-only.
 """
 
@@ -105,14 +104,12 @@ def _score_all(pdf_postings, analyzed, mode, n_docs, avgdl, df_map,
     query (exhaustive; value-shaped ordering defeats score bounds)."""
     from sparkfts.wand import score_conjunctive, score_disjunctive
 
-    rows_by_term, postings_of = _postings_reader(
-        pdf_postings, avgdl, block_size=128
-    )
+    rows_by_term, postings_of = _postings_reader(pdf_postings)
     idf_map = {t: idf_fn(n_docs, df_map.get(t, 0)) for t in rows_by_term}
     for qid, terms, k in analyzed:
         if mode == "and" and not all(t in rows_by_term for t in terms):
             continue
-        tp = [postings_of(t)[:3] for t in terms]
+        tp = [postings_of(t) for t in terms]
         idfs = np.array([idf_map.get(t, 0.0) for t in terms], np.float64)
         score = score_conjunctive if mode == "and" else score_disjunctive
         ids, scores = score(tp, idfs, avgdl, n_docs, exclude=exclude)
@@ -399,9 +396,7 @@ def boosting_batch(
 
         out = []
         if len(pdf_postings):
-            rows_by_term, postings_of = _postings_reader(
-                pdf_postings, avgdl, block_size=128
-            )
+            rows_by_term, postings_of = _postings_reader(pdf_postings)
             idf_map = {
                 t: idf_fn(n_docs, df_map.get(t, 0)) for t in rows_by_term
             }
@@ -410,7 +405,7 @@ def boosting_batch(
                     t in rows_by_term for t in pt
                 ):
                     continue
-                tp = [postings_of(t)[:3] for t in pt]
+                tp = [postings_of(t) for t in pt]
                 idfs = np.array(
                     [idf_map.get(t, 0.0) for t in pt], np.float64
                 )
@@ -434,7 +429,7 @@ def boosting_batch(
                         else score_disjunctive
                     )
                     neg_ids = nscore(
-                        [postings_of(t)[:3] for t in nts],
+                        [postings_of(t) for t in nts],
                         np.ones(len(nts)), avgdl, n_docs,
                     )[0]
                 if neg_ids.size:

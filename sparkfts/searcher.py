@@ -114,9 +114,7 @@ class Searcher:
         Every query path reads ``self.tombstones`` at call time (the
         decoded-postings caches store RAW postings; the exclude mask is
         applied per query), so a reload is all that's needed — no cache
-        invalidation. Block-max pruning re-gates automatically: the
-        ``blockmax_safe`` check at query time also requires
-        ``tombstones is None``.
+        invalidation.
         """
         from sparkfts.deletes import load_tombstones
 
@@ -157,13 +155,10 @@ class Searcher:
     def _local_postings(self, terms: list[str]) -> dict[str, tuple]:
         """Decoded (doc_ids, tfs, doclens) per term, LRU-cached on driver.
 
-        Shard/segment runs are concatenated and stably sorted by doc_id —
-        the same multi-run policy as the distributed reader
-        (:func:`sparkfts.query._postings_reader`).
+        Shard/segment runs merge exactly like the distributed reader's
+        (:func:`sparkfts.query.decode_runs`).
         """
-        import numpy as np
-
-        from sparkfts.codec import decode_varint, delta_decode
+        from sparkfts.query import decode_runs
 
         missing = [t for t in terms if t not in self._local_cache]
         if missing:
@@ -176,21 +171,7 @@ class Searcher:
             for r in rows:
                 by_term.setdefault(r["term"], []).append(r)
             for t in missing:
-                rs = by_term.get(t)
-                if not rs:
-                    self._local_cache[t] = (
-                        np.empty(0, np.int64),
-                        np.empty(0, np.uint64),
-                        np.empty(0, np.uint64),
-                    )
-                    continue
-                ids = np.concatenate(
-                    [delta_decode(decode_varint(r["doc_ids"])) for r in rs]
-                ).astype(np.int64)
-                tfs = np.concatenate([decode_varint(r["tfs"]) for r in rs])
-                dls = np.concatenate([decode_varint(r["doclens"]) for r in rs])
-                order = np.argsort(ids, kind="stable")
-                self._local_cache[t] = (ids[order], tfs[order], dls[order])
+                self._local_cache[t] = decode_runs(by_term.get(t))
         out = {}
         for t in terms:
             self._local_cache.move_to_end(t)
@@ -246,7 +227,6 @@ class Searcher:
         self,
         queries: list[tuple[int, str, int]],
         mode: str = "and",
-        use_blockmax: bool = True,
         resolve_urls: bool = False,
         offset: int = 0,
         search_after: dict[int, tuple[float, int]] | None = None,
@@ -279,14 +259,6 @@ class Searcher:
             mn_terms = tokenize_query(text, self._sw, self._stem)
             if mn_terms:
                 must_not_map[qid] = mn_terms
-        # streamed, unmerged segments carry point-in-time block maxima;
-        # same safety fallback as bm25_index_batch (exact, just unpruned).
-        # Tombstones/filters no longer gate pruning off: the r5
-        # filter-aware kernel seeds theta from ALLOWED docs only
-        # (sparkfts.wand.score_disjunctive_blockmax).
-        use_blockmax = use_blockmax and self.meta.get(
-            "blockmax_safe", True
-        )
         all_terms = sorted(
             {t for _, terms, _ in analyzed for t in terms}
             | {t for terms in must_not_map.values() for t in terms}
@@ -316,8 +288,6 @@ class Searcher:
             self.meta["n_docs"],
             self.meta["avgdl"],
             mode,
-            use_blockmax,
-            self.meta["block_size"],
             afters=search_after,
             exclude=self.tombstones,
             must_not_map=must_not_map or None,
@@ -364,7 +334,6 @@ class Searcher:
         self,
         queries: list[tuple[int, str, int]],
         mode: str = "and",
-        use_blockmax: bool = True,
         offset: int = 0,
         search_after: dict[int, tuple[float, int]] | None = None,
     ) -> list[tuple[int, int, int, float]]:
@@ -415,7 +384,6 @@ class Searcher:
             out = self.search_batch(
                 heavy_queries,
                 mode=mode,
-                use_blockmax=use_blockmax,
                 offset=offset,
                 search_after=search_after,
             ).collect()

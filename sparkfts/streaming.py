@@ -11,15 +11,11 @@ directory / an Iceberg table's new snapshots) is consumed with
 
 Consistency model:
 - Global BM25 stats (N, total tokens -> avgdl) are maintained as running
-  sums in ``stats.json`` and updated atomically per batch; every segment
-  records the stats it was encoded under.
-- Conjunctive/OR *exact* scoring is correct at any time (scores use the
-  CURRENT meta avgdl; tf/doclen are stats-independent).
-- Block-max pruning metadata is only guaranteed consistent with the
-  root's avgdl after a merge, so appends mark ``blockmax_safe: false`` in
-  meta and :func:`sparkfts.query.bm25_index_batch` silently falls back to
-  the exhaustive scorer until :func:`sparkfts.merge.merge_segments`
-  (which recomputes block metadata under the final avgdl) resets it.
+  sums in ``stream_stats.json`` and updated atomically per batch; the
+  first append to an index made by ``build_index`` seeds them from its
+  root meta. Every segment records the stats it was encoded under.
+- Scoring is exact at any time: scores use the CURRENT meta avgdl, and
+  postings store only stats-independent tf/doclen.
 - Batch replay after a crash overwrites the same ``stream_{batch_id}``
   segment (idempotent); the streaming checkpoint dir gives exactly-once
   batch ids.
@@ -42,6 +38,14 @@ def _read_running(index_dir: str) -> dict:
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)
+    if os.path.exists(os.path.join(index_dir, META_FILE)):
+        # first append to a built index: its docs count toward the stats
+        meta = read_meta(index_dir)
+        return {
+            "n_docs": meta["n_docs"],
+            "total_tokens": round(meta["n_docs"] * meta["avgdl"]),
+            "batches": [],
+        }
     return {"n_docs": 0, "total_tokens": 0, "batches": []}
 
 
@@ -164,10 +168,8 @@ def ingest_batch(
     if dedup:
         batch_df = _dedup_against_seen(batch_df, batch_id, index_dir)
     keep = sorted(
-        {routing_col} | set(docvalue_cols or []) - {None}
+        ({routing_col} | set(docvalue_cols or [])) - {None}
     ) if (routing_col or docvalue_cols) else None
-    if keep is not None:
-        keep = [c for c in keep if c]
     prepared = prepare_pages(batch_df, keep_cols=keep).cache()
     row = build_docmap(prepared, stopwords=stopwords,
                    stemmer=stemmer, expander=expander).agg(
@@ -224,10 +226,6 @@ def ingest_batch(
             "n_shards": n_shards,
             "n_tbuckets": n_tbuckets,
             "segment": None,
-            # appended segments carry block maxima computed under their
-            # own point-in-time avgdl: exhaustive scoring stays exact, but
-            # block-max pruning is only safe again after merge recomputes
-            "blockmax_safe": False,
         }
     )
     _write_json_atomic(root_meta_path, root)

@@ -49,7 +49,6 @@ def test_match_kernel_reads_only_doc_ids(spark, agg_index, queries):
     assert "doc_ids" in plan
     # column pruning must drop the unused posting payloads from the scan
     assert "doclens" not in plan, plan
-    assert "block_max_tfn" not in plan, plan
 
 
 def test_terms_facet_counts(spark, agg_index, pages_df, py_oracle, queries):

@@ -25,7 +25,6 @@ def _postings_content(spark, d):
             bytes(r["doc_ids"]),
             bytes(r["tfs"]),
             bytes(r["doclens"]),
-            tuple(r["block_max_tfn"]),
         )
         for r in load_postings(spark, d).collect()
     }

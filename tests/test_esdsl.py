@@ -594,6 +594,68 @@ def test_cli_search_dsl_aggs(spark, dsl_index, capsys):
               "--cores", "4"])
 
 
+def test_cli_search_dsl_sort_prints_sort_value(spark, dsl_index, capsys):
+    """CLI: a sorted body (alone, and with aggs) prints each hit's
+    ``sort_value``; a sorted page carries no score column."""
+    from sparkfts.cli import main
+    from sparkfts.index import load_docmap
+
+    qpart = {"match": {"text": {"query": "the", "operator": "and",
+                                "fuzziness": 0}}}
+    sort = [{"doclen": {"order": "desc"}}]
+    doclen = {r["doc_id"]: r["doclen"]
+              for r in load_docmap(spark, dsl_index).collect()}
+    for extra in ({}, {"aggs": {"by_lang": {"terms": {"field": "lang"}}}}):
+        body = json.dumps({"size": 4, "query": qpart, "sort": sort,
+                           **extra})
+        main(["search-dsl", "--index", dsl_index, "--body", body,
+              "--cores", "4"])
+        hits = [x for x in _out_lines(capsys) if "rank" in x]
+        assert len(hits) == 4 and all("score" not in h for h in hits)
+        assert [h["sort_value"] for h in hits] == [
+            doclen[h["doc_id"]] for h in hits
+        ]
+        keys = [(-h["sort_value"], h["doc_id"]) for h in hits]
+        assert keys == sorted(keys)
+
+
+def test_match_all_skips_tombstoned_docs(spark, dsl_index, tmp_path):
+    """match_all ranks, counts and sorts only live docs."""
+    import shutil
+
+    from sparkfts.deletes import delete_docs
+    from sparkfts.esdsl import run_request
+    from sparkfts.index import load_docmap
+
+    idx = str(tmp_path / "ma_del_idx")
+    shutil.copytree(dsl_index, idx)
+    dm = {r["doc_id"]: r["doclen"]
+          for r in load_docmap(spark, idx).collect()}
+    ids = sorted(dm)
+    by_len = sorted(dm, key=lambda d: (-dm[d], d))
+    victims = {ids[0], ids[2], by_len[0]}
+    delete_docs(spark, idx, list(victims))
+    live = [d for d in ids if d not in victims]
+
+    out = run_request(spark, idx, {"query": {"match_all": {}}, "size": 5,
+                                   "track_total_hits": True})
+    assert [(r["rank"], r["doc_id"]) for r in out["hits"].collect()] == [
+        (i + 1, d) for i, d in enumerate(live[:5])
+    ]
+    assert out["total"] == len(live)
+
+    out = run_request(
+        spark, idx,
+        {"query": {"match_all": {}}, "size": 3,
+         "sort": [{"doclen": {"order": "desc"}}],
+         "aggs": {"n": {"value_count": {"field": "doclen"}}}},
+        doc_values=load_docmap(spark, idx),
+    )
+    want = [d for d in by_len if d not in victims][:3]
+    assert [r["doc_id"] for r in out["hits"].collect()] == want
+    assert out["aggregations"]["n"].collect()[0][0] == len(live)
+
+
 def test_run_request_sort_from_source_total(spark, dsl_index, pages_df):
     """sort / from / _source / track_total_hits in the one-call body."""
     from pyspark.sql import functions as F

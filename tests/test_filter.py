@@ -2,10 +2,11 @@
 bool.must_not (query-level exclusion) — exactness vs brute force.
 
 Brute force = the unfiltered kernel at k=n_docs (already oracle-pinned
-by test_oracle/test_wand), restricted in pandas by the predicate /
+by test_oracle/test_index), restricted in pandas by the predicate /
 exclusion set, re-topped with the pinned (-score, doc_id) order. The
 filtered paths must reproduce it row-for-row INCLUDING scores (ES
-semantics: filters don't touch scoring stats).
+semantics: filters don't touch scoring stats). The plain filter and
+must_not cases are also checked against ``oracle/bm25.py`` directly.
 """
 
 from __future__ import annotations
@@ -62,6 +63,31 @@ def _brute(spark, fidx, query, mode, k, allowed=None, excluded=None):
     return rows[:k]
 
 
+def _oracle_topk(fcorpus, query, mode, k, allowed=None, excluded=None):
+    """``oracle/bm25.py`` over the whole corpus (filters leave scoring
+    stats alone), restricted to the allowed / non-excluded docs."""
+    import pandas as pd
+
+    from oracle.bm25 import BM25Oracle
+    from sparkfts.tokens import sha1_doc_id
+
+    ids = sha1_doc_id(pd.Series(fcorpus.column("url").to_pylist()))
+    oracle = BM25Oracle(zip(ids.tolist(), fcorpus.column("text").to_pylist()))
+    rows = [
+        (d, s)
+        for d, s in oracle.search(query, k=oracle.n_docs, mode=mode)
+        if (allowed is None or d in allowed)
+        and (excluded is None or d not in excluded)
+    ]
+    return rows[:k]
+
+
+def _assert_oracle(got, exp):
+    assert [r["doc_id"] for r in got] == [d for d, _ in exp]
+    for r, (_, s) in zip(got, exp):
+        assert r["score"] == pytest.approx(s, rel=1e-9)
+
+
 def test_filtered_topk_exact(spark, fcorpus, fidx):
     q = " ".join(_common_terms(fcorpus))
     allowed = {
@@ -80,23 +106,12 @@ def test_filtered_topk_exact(spark, fcorpus, fidx):
         assert [(r["doc_id"], r["score"]) for r in got] == exp, mode
         assert [r["rank"] for r in got] == list(range(1, len(exp) + 1))
         assert all(r["doc_id"] in allowed for r in got)
-
-
-def test_filtered_blockmax_parity(spark, fcorpus, fidx):
-    """Filtered OR results identical with and without use_blockmax
-    (pruning is gated off under a filter — over-prune hazard)."""
-    q = " ".join(_common_terms(fcorpus))
-    a = bm25_index_batch(
-        spark, fidx, [(0, q, 10)], mode="or",
-        filter_expr="lang = 'en'", use_blockmax=True,
+        _assert_oracle(got, _oracle_topk(fcorpus, q, mode, 10, allowed))
+    # OR at k=1: the single allowed winner
+    got = bm25_index_batch(
+        spark, fidx, [(0, q, 1)], mode="or", filter_expr="lang = 'en'"
     ).collect()
-    b = bm25_index_batch(
-        spark, fidx, [(0, q, 10)], mode="or",
-        filter_expr="lang = 'en'", use_blockmax=False,
-    ).collect()
-    assert [(r["doc_id"], r["score"]) for r in a] == [
-        (r["doc_id"], r["score"]) for r in b
-    ]
+    _assert_oracle(got, _oracle_topk(fcorpus, q, "or", 1, allowed))
 
 
 def test_filter_nothing_allowed(spark, fcorpus, fidx):
@@ -146,6 +161,13 @@ def test_must_not_excludes_and_keeps_scores(spark, fcorpus, fidx):
         ).collect()
         exp = _brute(spark, fidx, q, mode, 10, excluded=excluded)
         assert [(r["doc_id"], r["score"]) for r in got] == exp, mode
+        _assert_oracle(
+            got, _oracle_topk(fcorpus, q, mode, 10, excluded=excluded)
+        )
+    got = bm25_index_batch(
+        spark, fidx, [(0, q, 1)], mode="or", must_not={0: neg}
+    ).collect()
+    _assert_oracle(got, _oracle_topk(fcorpus, q, "or", 1, excluded=excluded))
 
 
 def test_must_not_with_filter_combined(spark, fcorpus, fidx):

@@ -242,31 +242,6 @@ def test_searcher_fuzzy_expansion_cap(spark, fuzzy_index, oracle):
         s.close()
 
 
-def test_searcher_blockmax_gated_on_meta(spark, fuzzy_index, monkeypatch):
-    """search_batch must fall back to the exhaustive OR scorer when
-    meta says block maxima are stale (ADVICE r1, searcher.py:244)."""
-    import sparkfts.searcher as searcher_mod
-    from sparkfts.query import _make_shard_scorer
-    from sparkfts.searcher import Searcher
-
-    seen = {}
-
-    def spy(analyzed, n_docs, avgdl, mode, use_blockmax, block_size, **kw):
-        seen["use_blockmax"] = use_blockmax
-        return _make_shard_scorer(
-            analyzed, n_docs, avgdl, mode, use_blockmax, block_size, **kw
-        )
-
-    monkeypatch.setattr(searcher_mod, "_make_shard_scorer", spy)
-    s = Searcher(spark, fuzzy_index, local_threshold=0)  # force distributed
-    try:
-        s.meta = dict(s.meta, blockmax_safe=False)
-        s.search_batch([(0, "the quick", 5)], mode="or", use_blockmax=True).collect()
-        assert seen["use_blockmax"] is False
-    finally:
-        s.close()
-
-
 def test_term_suggester_pinned_order(spark, tmp_path):
     """Term suggester: corrections within AUTO distance, ordered
     (dist asc, df desc, term asc), input term itself excluded."""

@@ -58,9 +58,6 @@ def test_meta_and_format(spark, index_dir, oracle):
         ids = decode_postings(bytes(r["doc_ids"]))
         assert (np.diff(ids.astype(np.int64)) > 0).all()  # sorted, unique
         assert len(decode_varint(bytes(r["tfs"]))) == r["df_shard"]
-        n_blocks = int(np.ceil(r["df_shard"] / meta["block_size"]))
-        assert len(r["block_max_tfn"]) == n_blocks
-        assert len(r["block_first_doc"]) == n_blocks
         # every doc in this shard row belongs to the shard
         assert ((ids.astype(np.int64) % meta["n_shards"]) == r["shard"]).all()
 
@@ -76,18 +73,22 @@ def test_rank_identity_over_index(spark, index_dir, oracle, queries):
         _check(expected, by_qid.get(q["query_id"], []))
 
 
-def test_rank_identity_or_blockmax(spark, index_dir, oracle, queries):
-    qs = [q for q in queries if q["query_id"] < 12]
-    for use_bm in (False, True):
-        res = bm25_index_batch(
-            spark, index_dir,
-            [(q["query_id"], q["query"], q["k"]) for q in qs],
-            mode="or", use_blockmax=use_bm,
-        ).collect()
-        by_qid = _group(res)
-        for q in qs:
-            expected = oracle.search(q["query"], k=q["k"], mode="or")
-            _check(expected, by_qid.get(q["query_id"], []))
+def test_rank_identity_or(spark, index_dir, oracle, queries):
+    """OR top-k at each query's own k and at k=1, plus every dictionary
+    term alone at k=1 (single-term queries are where a k=1 winner is
+    easiest to lose)."""
+    qs = [(q["query"], q["k"]) for q in queries if q["query_id"] < 12]
+    qs += [(text, 1) for text, _ in qs]
+    qs += [(t, 1) for t in sorted(oracle.postings)]
+    res = bm25_index_batch(
+        spark, index_dir,
+        [(qid, text, k) for qid, (text, k) in enumerate(qs)],
+        mode="or",
+    ).collect()
+    by_qid = _group(res)
+    for qid, (text, k) in enumerate(qs):
+        expected = oracle.search(text, k=k, mode="or")
+        _check(expected, by_qid.get(qid, []))
 
 
 def test_single_query_with_urls(spark, index_dir, corpus):
@@ -125,7 +126,7 @@ def test_index_stats(spark, tmp_path, corpus):
     s = index_stats(spark, idx)
     assert s["n_docs"] == 400 and s["segments"][0]["docs"] == 400
     assert s["total_postings"] > 0 and s["total_bytes"] > 0
-    assert s["tombstones"] == 0 and s["blockmax_safe"] is True
+    assert s["tombstones"] == 0
     from sparkfts.index import load_terms
     from pyspark.sql import functions as F
 

@@ -1,9 +1,10 @@
 """Incremental ingest: streaming micro-batches -> segments -> merged index.
 
 Covers SURVEY.md §2.9's engine-side growth path: file-source readStream
-with availableNow drain, per-batch segment commit + running global stats,
-blockmax_safe gating, idempotent batch replay, and post-merge
-rank-identity against the oracle over the full accumulated corpus.
+with availableNow drain, per-batch segment commit + running global stats
+(seeded from a built index's meta on the first append), idempotent batch
+replay, and rank-identity against the oracle over the full accumulated
+corpus, before and after the merge.
 """
 
 from __future__ import annotations
@@ -46,9 +47,8 @@ def test_streaming_ingest_and_merge(spark, two_waves, tmp_path):
     start_incremental_index(spark, src, idx, ckpt, n_shards=4, n_tbuckets=8)
     meta = read_meta(idx)
     assert meta["n_docs"] == 120
-    assert meta["blockmax_safe"] is False  # appended, not yet merged
 
-    # queries against the partial index are exact (exhaustive fallback)
+    # queries against the appended, unmerged index are exact
     oracle1 = _oracle_of(full.slice(0, 120))
     term = max(oracle1.postings, key=oracle1.df)
     got = bm25_index_batch(spark, idx, [(0, term, 10)], mode="or").collect()
@@ -61,12 +61,12 @@ def test_streaming_ingest_and_merge(spark, two_waves, tmp_path):
     meta = read_meta(idx)
     assert meta["n_docs"] == 200
 
-    # compact; blockmax re-enabled, stats final
+    # compact; stats final
     merge_segments(spark, idx)
     meta = read_meta(idx)
-    assert meta["blockmax_safe"] is True and meta["segments"] == []
+    assert meta["segments"] == []
 
-    # full-corpus rank-identity incl. block-max OR path
+    # full-corpus rank-identity
     oracle = _oracle_of(full)
     for mode in ("and", "or"):
         got = bm25_index_batch(spark, idx, [(0, term, 10)], mode=mode).collect()
@@ -74,6 +74,52 @@ def test_streaming_ingest_and_merge(spark, two_waves, tmp_path):
         assert [r["doc_id"] for r in got] == [d for d, _ in exp], mode
         for r, (_, s) in zip(got, exp):
             assert r["score"] == pytest.approx(s, rel=1e-9)
+
+
+def test_ingest_into_built_index_with_docvalues(spark, tmp_path):
+    """Appending to an index built with doc-value columns and no routing
+    column inherits the doc-value columns."""
+    from sparkfts.index import build_index, load_docmap
+
+    idx = os.path.join(str(tmp_path), "dv_idx")
+    pdf = gen_corpus(40, seed=17).to_pandas()
+    build_index(spark.createDataFrame(pdf.iloc[:30]), idx, n_shards=2,
+                n_tbuckets=4, docvalue_cols=["lang"])
+    meta = ingest_batch(spark.createDataFrame(pdf.iloc[30:]), 0, idx,
+                        n_shards=2, n_tbuckets=4)
+    assert meta["n_docs"] == 40 and meta["docvalue_cols"] == ["lang"]
+    got = {r["url"]: r["lang"] for r in load_docmap(spark, idx).collect()}
+    assert got == dict(zip(pdf["url"], pdf["lang"]))
+
+
+def test_ingest_into_built_index_keeps_its_stats(spark, tmp_path):
+    """Appending M docs to a built N-doc index: running stats start from
+    the built index's meta, so the unmerged index scores like the oracle
+    over all N+M docs (OR top-k over its segments, k=10 and k=1)."""
+    from sparkfts.index import build_index
+
+    idx = os.path.join(str(tmp_path), "built_then_append")
+    full = gen_corpus(80, seed=23)
+    build_index(spark.createDataFrame(full.slice(0, 60).to_pandas()), idx,
+                n_shards=4, n_tbuckets=8)
+    ingest_batch(spark.createDataFrame(full.slice(60).to_pandas()), 0, idx,
+                 n_shards=4, n_tbuckets=8)
+    meta = read_meta(idx)
+    oracle = _oracle_of(full)
+    assert meta["n_docs"] == 80 == oracle.n_docs
+    assert meta["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
+    terms = sorted(oracle.postings, key=oracle.df, reverse=True)
+    queries = [" ".join(terms[:2]), " ".join(terms[5:8]), terms[-1]]
+    pairs = [(q, k) for q in queries for k in (10, 1)]
+    batch = [(i, q, k) for i, (q, k) in enumerate(pairs)]
+    got = bm25_index_batch(spark, idx, batch, mode="or").collect()
+    for qid, q, k in batch:
+        rows = sorted((r for r in got if r["query_id"] == qid),
+                      key=lambda r: r["rank"])
+        exp = oracle.search(q, k=k, mode="or")
+        assert [r["doc_id"] for r in rows] == [d for d, _ in exp], q
+        for r, (_, sc) in zip(rows, exp):
+            assert r["score"] == pytest.approx(sc, rel=1e-9)
 
 
 def test_ingest_batch_replay_is_noop(spark, two_waves, tmp_path):

@@ -1,16 +1,8 @@
-"""Kernel unit tests: intersection, top-k tie-safety, WAND == exhaustive."""
+"""Kernel unit tests: intersection, top-k tie-safety, msm grammar."""
 
 import numpy as np
-import pytest
 
-from sparkfts.wand import (
-    _topk,
-    block_metadata,
-    score_conjunctive,
-    score_disjunctive,
-    score_disjunctive_blockmax,
-    tf_norm,
-)
+from sparkfts.wand import _topk, score_conjunctive, score_disjunctive
 
 
 def _mk(ids, tfs, dl=50):
@@ -20,18 +12,6 @@ def _mk(ids, tfs, dl=50):
         np.asarray(tfs, np.uint64),
         np.full(ids.size, dl, np.int64),
     )
-
-
-def test_block_metadata_invariant():
-    rng = np.random.default_rng(0)
-    ids = np.sort(rng.choice(10_000, 700, replace=False)).astype(np.int64)
-    tfn = rng.random(700)
-    first, maxes = block_metadata(ids, tfn, block_size=128)
-    assert first.size == maxes.size == int(np.ceil(700 / 128))
-    for bi in range(first.size):
-        lo, hi = bi * 128, min((bi + 1) * 128, 700)
-        assert maxes[bi] == tfn[lo:hi].max()  # block max >= every member
-        assert first[bi] == ids[lo]
 
 
 def test_topk_tie_safety():
@@ -64,184 +44,6 @@ def test_conjunctive_matches_disjunctive_on_same_candidates():
     io, so = score_disjunctive([a, b], idfs, 50.0, 10)
     assert ia.tolist() == io.tolist()
     assert sa.tolist() == so.tolist()  # bitwise: same summation order
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_blockmax_equals_exhaustive_randomized(seed):
-    rng = np.random.default_rng(seed)
-    n_docs = 3000
-    dl_of = rng.integers(5, 200, n_docs).astype(np.int64)
-    avgdl = float(dl_of.mean())
-    terms, metas = [], []
-    for _ in range(4):
-        df = int(rng.integers(10, 1500))
-        ids = np.sort(rng.choice(n_docs, df, replace=False)).astype(np.int64)
-        tfs = rng.integers(1, 8, df).astype(np.uint64)
-        dls = dl_of[ids]
-        terms.append((ids, tfs, dls))
-        metas.append(block_metadata(ids, tf_norm(tfs, dls, avgdl), 128))
-    idfs = rng.random(4) * 3 + 0.1
-    for k in (1, 10, 100):
-        ie, se = score_disjunctive(terms, idfs, avgdl, k)
-        ib, sb = score_disjunctive_blockmax(
-            terms, idfs, metas, avgdl, k, block_size=128
-        )
-        assert ie.tolist() == ib.tolist(), f"k={k} rank mismatch"
-        assert se.tolist() == sb.tolist(), f"k={k} score mismatch"
-
-
-def test_blockmax_prunes_something():
-    # one rare high-idf term + one huge low-idf term: pruning must engage
-    rng = np.random.default_rng(99)
-    n_docs = 20_000
-    rare_ids = np.sort(rng.choice(n_docs, 30, replace=False)).astype(np.int64)
-    rare = (rare_ids, np.full(30, 5, np.uint64), np.full(30, 100, np.int64))
-    com_ids = np.arange(0, n_docs, 2, dtype=np.int64)
-    common = (
-        com_ids,
-        np.ones(com_ids.size, np.uint64),
-        np.full(com_ids.size, 100, np.int64),
-    )
-    terms = [common, rare]
-    idfs = np.array([0.05, 6.0])
-    avgdl = 100.0
-    metas = [
-        block_metadata(t[0], tf_norm(t[1], t[2], avgdl), 128) for t in terms
-    ]
-    ie, se = score_disjunctive(terms, idfs, avgdl, 10)
-    ib, sb = score_disjunctive_blockmax(
-        terms, idfs, metas, avgdl, 10, block_size=128
-    )
-    assert ie.tolist() == ib.tolist()
-    assert se.tolist() == sb.tolist()
-
-
-def test_blockmax_k1_every_term(spark, tmp_path):
-    """Regression: block-max at k=1 must equal exhaustive for EVERY
-    dictionary term. The old upper-bound float association
-    (idf*(k1+1)*maxtfn vs the kernels' (idf*tfn)*(k1+1)) could land one
-    ULP below the exact k=1 theta and prune the winning block — single-
-    rare-term queries silently returned nothing."""
-    from sparkfts.index import build_index, load_terms
-    from sparkfts.query import bm25_index_batch
-    from sparkfts.synth import gen_corpus
-
-    idx = str(tmp_path / "k1_idx")
-    corpus = gen_corpus(300, seed=42)
-    build_index(spark.createDataFrame(corpus.to_pandas()), idx,
-                n_shards=4, n_tbuckets=8)
-    terms = [r["term"] for r in load_terms(spark, idx).collect()]
-    assert len(terms) > 50
-    for k in (1, 3):
-        batch = [(i, t, k) for i, t in enumerate(terms)]
-        bm = bm25_index_batch(spark, idx, batch, mode="or",
-                              use_blockmax=True).collect()
-        ex = bm25_index_batch(spark, idx, batch, mode="or",
-                              use_blockmax=False).collect()
-        key = lambda rows: {
-            (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-            for r in rows
-        }
-        assert key(bm) == key(ex), f"k={k}"
-        # every term matches at least its own df docs -> nonempty result
-        assert {r["query_id"] for r in bm} == set(range(len(terms)))
-
-
-@pytest.mark.parametrize("seed", [3, 17, 91, 404])
-def test_blockmax_filtered_equals_exhaustive(seed):
-    """r5 filter-aware block-max: with include (bool.filter) and/or
-    exclude (tombstones) sets, pruned results must stay rank- and
-    score-identical to the exhaustive scorer over the allowed docs."""
-    rng = np.random.default_rng(seed)
-    n_docs = 3000
-    dl_of = rng.integers(5, 200, n_docs).astype(np.int64)
-    avgdl = float(dl_of.mean())
-    terms, metas = [], []
-    for _ in range(4):
-        df = int(rng.integers(10, 1500))
-        ids = np.sort(rng.choice(n_docs, df, replace=False)).astype(np.int64)
-        tfs = rng.integers(1, 8, df).astype(np.uint64)
-        dls = dl_of[ids]
-        terms.append((ids, tfs, dls))
-        metas.append(block_metadata(ids, tf_norm(tfs, dls, avgdl), 128))
-    idfs = rng.random(4) * 3 + 0.1
-    include = np.sort(
-        rng.choice(n_docs, n_docs // 3, replace=False)
-    ).astype(np.int64)
-    exclude = np.sort(
-        rng.choice(n_docs, n_docs // 10, replace=False)
-    ).astype(np.int64)
-    for k in (1, 10, 100):
-        for inc, exc in ((include, None), (None, exclude),
-                         (include, exclude)):
-            ie, se = score_disjunctive(
-                terms, idfs, avgdl, k, include=inc, exclude=exc
-            )
-            ib, sb = score_disjunctive_blockmax(
-                terms, idfs, metas, avgdl, k, block_size=128,
-                include=inc, exclude=exc,
-            )
-            assert ie.tolist() == ib.tolist(), (k, inc is None, exc is None)
-            assert se.tolist() == sb.tolist(), (k, inc is None, exc is None)
-
-
-def test_blockmax_filtered_over_prune_hazard():
-    """The exact case that forced the old exhaustive fallback: the seed
-    term's GLOBAL top docs are all filtered out, so an unfiltered theta
-    would over-prune the blocks holding the true (allowed) winners."""
-    n_docs = 20_000
-    avgdl = 100.0
-    # seed term: huge tf on the first 128-block, tf=1 elsewhere
-    ids = np.arange(0, n_docs, 2, dtype=np.int64)
-    tfs = np.ones(ids.size, np.uint64)
-    tfs[:128] = 50
-    dls = np.full(ids.size, 100, np.int64)
-    terms = [(ids, tfs, dls)]
-    idfs = np.array([2.0])
-    metas = [block_metadata(ids, tf_norm(tfs, dls, avgdl), 128)]
-    # filter excludes every doc of the hot first block
-    include = ids[128:]
-    ie, se = score_disjunctive(
-        terms, idfs, avgdl, 10, include=include
-    )
-    ib, sb = score_disjunctive_blockmax(
-        terms, idfs, metas, avgdl, 10, block_size=128, include=include
-    )
-    assert ie.size == 10 and ib.tolist() == ie.tolist()
-    assert sb.tolist() == se.tolist()
-    # sanity: unfiltered winners are different docs (the hazard is real)
-    iu, _ = score_disjunctive_blockmax(
-        terms, idfs, metas, avgdl, 10, block_size=128
-    )
-    assert set(iu.tolist()) != set(ib.tolist())
-
-
-def test_blockmax_filtered_end_to_end(spark, tmp_path):
-    """bm25_index_batch with bool.filter takes the block-max path since
-    r5 and must stay byte-identical to --no-blockmax."""
-    import pandas as pd
-
-    from sparkfts.index import build_index
-    from sparkfts.query import bm25_index_batch
-    from sparkfts.synth import gen_corpus
-
-    pages = spark.createDataFrame(gen_corpus(400, seed=5).to_pandas())
-    from pyspark.sql import functions as F
-
-    pages = pages.withColumn(
-        "par", (F.crc32(F.col("url")) % 2).cast("int")
-    )
-    idx = str(tmp_path / "fidx")
-    build_index(pages, idx, n_shards=4, n_tbuckets=8,
-                docvalue_cols=["par"])
-    qs = [(0, "the of", 10), (1, "data", 10)]
-    a = bm25_index_batch(spark, idx, qs, mode="or",
-                         filter_expr="par = 1").collect()
-    b = bm25_index_batch(spark, idx, qs, mode="or",
-                         filter_expr="par = 1",
-                         use_blockmax=False).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert a, "premise: the filtered queries match docs"
 
 
 def test_parse_minimum_should_match():
